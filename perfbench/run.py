@@ -201,14 +201,10 @@ def main():
     work = os.path.join(BUILD, "work", f"{a.workload}-{a.seed}-{os.getpid()}")
     log(f"{a.workload} seed={a.seed} trace={a.trace} {sfs} "
         f"local[{nproc()}] heap={heap}g")
-    # per-seed recorded quality values are keyed by everything they depend on
-    recorded = os.path.join(BUILD, "recorded", tree_hash(
-        [os.path.join(ROOT, "src", "main"), os.path.join(HERE, "src"),
-         os.path.join(HERE, "gen_data.py")])[:16])
     code, out = launch(classes, work, deadline - time.time(), [
         "--workload", a.workload, "--seed", str(a.seed),
         "--seconds", str(a.seconds), "--trace", str(a.trace),
-        "--data", data_dir, "--recorded", recorded,
+        "--data", data_dir,
         "--expected", os.path.join(HERE, "expected", "mix.json")]
         + [x for k, v in sfs.items() for x in (f"--{k}", v)])
     if code is None:

@@ -1,7 +1,10 @@
 package perfbench
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark driver: one closed-loop workload per process.
@@ -10,16 +13,16 @@ import org.apache.spark.sql.SparkSession
   * perfbench.Main --workload recsys_ref|analytics_mix
   *   --seed N --seconds S --trace 0|1 --data DIR --work DIR --cpus C
   *   --recsys-sf SF | --mix-sf SF --intake-sf SF
-  *   --recorded DIR --expected FILE
+  *   --expected FILE
   * perfbench.Main --record OUT --data DIR --work DIR --cpus C --mix-sf SF
   * }}}
   *
   * Set-up (session, table touch, fits, a checked warm operation) runs
   * first; then operations run one at a time until `--seconds` have
-  * passed and at least two completed: the first operation after a single
-  * warm one still runs up to 25% slower, so every metric is a median (or
-  * mean) over at least two. Each operation's outputs are checked. The
-  * last stdout line is `PERFBENCH_RESULT {json}`.
+  * passed and at least the workload's `minOps` completed: the first
+  * operation after a single warm one still runs up to 40% slower, so
+  * every metric is a median over at least two. Each operation's outputs
+  * are checked. The last stdout line is `PERFBENCH_RESULT {json}`.
   */
 object Main {
 
@@ -67,9 +70,19 @@ object Main {
     def e2e(walls: Seq[Double]): Seq[(String, M)]
     /** Workload-named per-layer metrics from the traced operations. */
     def layers(tracedOps: Seq[Span]): Seq[(String, M)]
+    /** Timed operations every run makes, whatever `--seconds` says. */
+    def minOps: Int = 2
     /** The headline operation time: what `op_p50_s` reports. */
     def headline(walls: Seq[Double]): Double = median(walls)
   }
+
+  /** Writes the result line and the record file; Scala maps, sequences
+    * and options map to JSON objects, arrays and null.
+    */
+  val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** A measured value as written: NaN or infinite (not measured) is null. */
+  def num(x: Double): Option[Double] = Some(x).filter(v => !v.isNaN && !v.isInfinite)
 
   def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) Double.NaN else {
@@ -141,7 +154,6 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val seconds = args("seconds").toDouble
-    val minOps = 2
     // set-up failures propagate: a broken warm operation fails the run
     w.setup()
     val setupS = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1e3
@@ -150,7 +162,7 @@ object Main {
     val loopT0 = System.nanoTime()
     var i = 0
     def elapsed = (System.nanoTime() - loopT0) / 1e9
-    while (i < minOps || elapsed < seconds) {
+    while (i < w.minOps || elapsed < seconds) {
       // traced runs alternate traced and untraced operations so the
       // tracer's own cost is measured in the same process
       val traced = ctx.trace && i % 2 == 0
@@ -208,7 +220,7 @@ object Main {
           w.layers(tracedSpans)
       }
 
-    val prov = Seq(
+    val prov = ListMap(
       "workload" -> w.name, "seed" -> ctx.seed, "nproc" -> ctx.cpus,
       "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1e6,
       "spark_version" -> ctx.spark.version,
@@ -218,9 +230,9 @@ object Main {
       "ops_attempted" -> attempted,
       "traced_ops" -> walls.zipWithIndex.collect { case ((_, true), j) => j }.toSeq,
       "seconds" -> ctx.args("seconds"))
-    def metricsJson(ms: Seq[(String, M)]) = Json.obj(ms.map { case (k, m) =>
-      k -> Map("value" -> m.value, "unit" -> m.unit) })
-    val result = Json.obj(Seq(
+    def metrics(ms: Seq[(String, M)]) = ListMap.from(ms.map { case (k, m) =>
+      k -> ListMap("value" -> num(m.value), "unit" -> m.unit) })
+    val result = json.writeValueAsString(ListMap(
       "workload" -> w.name,
       "trace" -> ctx.trace,
       "correct" -> ctx.failures.isEmpty,
@@ -228,12 +240,12 @@ object Main {
       "failed" -> failed,
       "failures" -> ctx.failures.map { case (o, m) => s"op $o: $m" }.toSeq,
       "checks_run" -> ctx.checksRun,
-      "end_to_end" -> Json.Raw(metricsJson(e2e)),
-      "per_layer" -> Json.Raw(metricsJson(layers)),
+      "end_to_end" -> metrics(e2e),
+      "per_layer" -> metrics(layers),
       "ops" -> walls.zipWithIndex.map { case ((x, t), j) =>
-        Map("op" -> j, "wall_s" -> x, "traced" -> t) }.toSeq,
-      "spans" -> Json.Raw(if (ctx.trace) ctx.tracer.spansJson else "[]"),
-      "provenance" -> Json.Raw(Json.obj(prov))))
+        ListMap("op" -> j, "wall_s" -> num(x), "traced" -> t) }.toSeq,
+      "spans" -> (if (ctx.trace) ctx.tracer.spanRecords else Nil),
+      "provenance" -> prov))
     println("PERFBENCH_RESULT " + result)
     if (ctx.failures.isEmpty) 0 else 1
   }

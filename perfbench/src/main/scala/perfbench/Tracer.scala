@@ -214,9 +214,11 @@ final class Tracer(sc: SparkContext) {
       gcS = (s.gcEndMs - s.gcStartMs) / 1e3)
   }
 
-  def spansJson: String = spans.map { s =>
-    Json.obj(Seq("id" -> s.id, "name" -> s.name, "parent" -> s.parent,
-      "request" -> s.request, "start_ms" -> s.startMs, "end_ms" -> s.endMs,
-      "wall_s" -> s.wallS, "self_s" -> selfS(s), "traced" -> traced(s.id)))
-  }.mkString("[", ",", "]")
+  /** Every span, as written to the artifact. */
+  def spanRecords: Seq[Map[String, Any]] = spans.toSeq.map { s =>
+    scala.collection.immutable.ListMap("id" -> s.id, "name" -> s.name,
+      "parent" -> s.parent, "request" -> s.request, "start_ms" -> s.startMs,
+      "end_ms" -> s.endMs, "wall_s" -> s.wallS, "self_s" -> selfS(s),
+      "traced" -> traced(s.id))
+  }
 }

@@ -3,10 +3,10 @@
     python3 -m unittest discover -s perfbench/tests -v
 
 Runs each workload at sf0.001, untraced and traced (`run.py --tiny`,
-two operations each), and asserts that the run exits 0 with its output
-checks passing, that the last line carries every BENCHMARK.json metric
-with the unit BENCHMARK.json declares, and that every workload-named
-metric is printed with its unit.
+the workload's minimum number of operations), and asserts that the run
+exits 0 with its output checks passing, that the last line carries
+every BENCHMARK.json metric with the unit BENCHMARK.json declares, and
+that every workload-named metric is printed with its unit.
 """
 import json
 import os
